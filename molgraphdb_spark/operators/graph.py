@@ -87,38 +87,47 @@ def graph_stats(edges: DataFrame) -> dict:
     return {"unique_molecules": row.unique_molecules, "n_edges": row.n_edges}
 
 
-def bfs_distances(
+def _materialized(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is already a leaf that costs
+    nothing to re-read: a driver-side ``LocalRelation`` (literal_df,
+    small createDataFrame) or a ``LogicalRDD`` over a checkpointed RDD
+    (localCheckpoint)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    kind = plan.getClass().getSimpleName()
+    return kind == "LocalRelation" or (kind == "LogicalRDD" and plan.rdd().isCheckpointed())
+
+
+def _bfs_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst) of ``edges``, materialized at most once. A derived
+    edge table (e.g. a join+distinct) would otherwise be recomputed
+    from scratch every wave — the dominant cost at scale. On a real
+    cluster this is the bucketed-by-src edge table; here
+    localCheckpoint pins it and gives AQE exact sizes for join-side
+    selection per wave. An edge frame that is already materialized is
+    used as it is: re-checkpointing it per query is one job per call
+    for nothing."""
+    pairs = edges.select("src", "dst")
+    return pairs if _materialized(edges) else pairs.localCheckpoint()
+
+
+def _bfs_waves(
     edges: DataFrame,
     source: str | int,
-    max_depth: int = 100,
-    target: str | int | None = None,
-) -> DataFrame:
-    """Per-wave frontier BFS from ``source``; returns (id, dist) for
-    every vertex reached within ``max_depth`` edges (dist = edge count).
-
-    Implements the reference's wavefront loop
-    (/root/reference/main.py:283–303): each wave is
-    frontier ⋈ edges on src (J1) followed by a left-anti join against
-    the visited set (J2/P5). Early-exits when ``target`` is reached
-    (main.py:292–293) or the frontier empties.
-    """
+    max_depth: int,
+    target: str | int | None,
+) -> tuple[DataFrame, int | None]:
+    """The single-source wave loop behind :func:`bfs_distances` and
+    :func:`bfs_query`: returns (visited(id, dist), depth at which
+    ``target`` was reached or None)."""
     spark = edges.sparkSession
-    # Materialize the edge relation ONCE: a derived edge table (e.g. a
-    # join+distinct) would otherwise be recomputed from scratch every
-    # wave — the dominant cost at scale. On a real cluster this is the
-    # bucketed-by-src edge table; here localCheckpoint pins it and
-    # gives AQE exact sizes for join-side selection per wave.
-    edges = edges.select("src", "dst").localCheckpoint()
-    # Seed built JVM-side (range + lit): a createDataFrame seed would
-    # drag a Python pickle stage into every wave's job graph.
+    edges = _bfs_edges(edges)
+    # One-row seed over spark.range, left lazy: a createDataFrame seed
+    # would drag a Python pickle stage into every wave's job graph, and
+    # checkpointing a one-row frame is a job per query for nothing.
     id_lit = F.lit(source).cast("long") if isinstance(source, int) else F.lit(source)
-    visited = (
-        spark.range(1)
-        .select(id_lit.alias("id"), F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
-    )
+    visited = spark.range(1).select(id_lit.alias("id"), F.lit(0).cast("long").alias("dist"))
     if target is not None and source == target:
-        return visited
+        return visited, 0
     frontier = visited
     for depth in range(1, max_depth + 1):
         # No forced broadcast: wave-1 frontiers are tiny (AQE
@@ -153,9 +162,27 @@ def bfs_distances(
         # no extra materialization job per wave.
         visited = visited.unionByName(new_frontier)
         if got.get("hit"):
-            break
+            return visited, depth
         frontier = new_frontier
-    return visited
+    return visited, None
+
+
+def bfs_distances(
+    edges: DataFrame,
+    source: str | int,
+    max_depth: int = 100,
+    target: str | int | None = None,
+) -> DataFrame:
+    """Per-wave frontier BFS from ``source``; returns (id, dist) for
+    every vertex reached within ``max_depth`` edges (dist = edge count).
+
+    Implements the reference's wavefront loop
+    (reference main.py:283–303): each wave is
+    frontier ⋈ edges on src (J1) followed by a left-anti join against
+    the visited set (J2/P5). Early-exits when ``target`` is reached
+    (main.py:292–293) or the frontier empties.
+    """
+    return _bfs_waves(edges, source, max_depth, target)[0]
 
 
 def multi_bfs_distances(
@@ -174,7 +201,7 @@ def multi_bfs_distances(
     loop, reference main.py:283–303, just with the seed column carried
     through)."""
     spark = edges.sparkSession
-    edges = edges.select("src", "dst").localCheckpoint()
+    edges = _bfs_edges(edges)
     # dedupe seeds (order-preserving): a duplicate entry would seed
     # visited twice and silently double every downstream per-seed
     # aggregate (r6 advice)
@@ -212,12 +239,12 @@ def bfs_query(edges: DataFrame, mol_from: str, mol_to: str, max_depth: int = 100
     (verified in SURVEY.md §3.1): number of NODES on the path —
     identical endpoints → 1, one edit apart → 2 — and −1 when
     unreachable within ``max_depth`` waves
-    (/root/reference/main.py:272–305)."""
+    (reference main.py:272–305). The answer is the depth of the
+    wave whose target-hit Observation fired; no job runs after it."""
     if mol_from == mol_to:
         return 1
-    dists = bfs_distances(edges, mol_from, max_depth=max_depth, target=mol_to)
-    hit = dists.filter(F.col("id") == mol_to).select("dist").first()
-    return int(hit.dist) + 1 if hit is not None else -1
+    depth = _bfs_waves(edges, mol_from, max_depth, mol_to)[1]
+    return depth + 1 if depth is not None else -1
 
 
 def pagerank(
@@ -343,7 +370,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     wave is one join + one groupBy-min. At scale, the large-star/
     small-star algorithm halves rounds, but label propagation keeps the
     same join shape and is fine for bounded-diameter graphs."""
-    e = edges.select("src", "dst").localCheckpoint()  # materialize once (see bfs_distances)
+    e = edges.select("src", "dst").localCheckpoint()  # materialize once (see _bfs_edges)
     labels = vertices(e).withColumn("component", F.col("id")).localCheckpoint()
     connected_components.last_converged = False
     connected_components.last_rounds = 0

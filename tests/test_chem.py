@@ -277,6 +277,53 @@ def test_expand_relations_driver_dispatch_matches_wave_loop(spark):
     assert {tuple(r) for r in e_cap.collect()} == {tuple(r) for r in e_ref.collect()}
 
 
+def test_expand_relations_empty_seeds_forced_wave_loop(spark, monkeypatch):
+    # driver_max_mols=0 forces the wave loop even when the seed list is
+    # empty (0 <= 0 must not take the driver branch)
+    from molgraphdb_spark.chem import spark_ops
+
+    def no_driver(*_a, **_k):
+        raise AssertionError("driver branch taken")
+
+    monkeypatch.setattr(spark_ops, "_expand_driver", no_driver)
+    edges, verts = expand_relations(spark, [], depth=3, driver_max_mols=0)
+    assert edges.columns == ["src", "dst", "diff_atom", "diff_bond", "subs"]
+    assert verts.columns == ["mol_id", "smiles"]
+    assert edges.collect() == [] and verts.collect() == []
+
+
+def _tied_edits(mol, smi):
+    """The real edit kernel with a worse twin of every edge emitted
+    first: same ordered (src, dst), larger (diff_atom, subs)."""
+    for s, s_smi, o, da, db, subs in all_single_edits(mol, smi):
+        yield (s, s_smi, o, da + 1, db, subs + 1)
+        yield (s, s_smi, o, da, db, subs)
+
+
+def test_expand_relations_tied_edits_keep_min_attrs_on_both_branches(spark, monkeypatch):
+    # Two edits of one frontier molecule reaching the same ordered pair
+    # with different attributes: both branches keep the minimum
+    # (diff_atom, diff_bond, subs) tuple, whatever the emit order, so
+    # full edge tuples agree.
+    from molgraphdb_spark.chem import spark_ops
+
+    seeds = ["CCC", "CC", "C1CCC1"]
+    rows = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
+    want_e, want_v = (rows(df) for df in expand_relations(spark, seeds, depth=2))
+
+    def tied_wave(frontier):
+        cands = [e for r in frontier.collect() for e in _tied_edits(parse_smiles(r.smiles), r.smiles)]
+        return spark.createDataFrame(cands, spark_ops.EDGE_COLS)
+
+    monkeypatch.setattr(spark_ops, "all_single_edits", _tied_edits)
+    monkeypatch.setattr(spark_ops, "expand_wave", tied_wave)
+    e_drv, v_drv = expand_relations(spark, seeds, depth=2)
+    e_dst, v_dst = expand_relations(spark, seeds, depth=2, driver_max_mols=0)
+    assert rows(e_drv) == rows(e_dst) == want_e
+    ids = lambda df: {r.mol_id for r in df.collect()}  # noqa: E731
+    assert ids(v_drv) == ids(v_dst) == {v[0] for v in want_v}
+
+
 def test_expand_relations_fixed_point(spark):
     # seeds CCC, CC, C(C)C (main.py:377–380): CCC ≡ C(C)C (same WL id)
     edges, vertices = expand_relations(spark, ["CCC", "CC", "C(C)C"], depth=2)

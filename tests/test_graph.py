@@ -62,6 +62,54 @@ def test_bfs_depth_cap(edges):
     assert bfs_query(edges, "A", "D", max_depth=2) == -1
 
 
+def _path_edges(spark):
+    """Path A–B–C–D–E plus the isolated pair X–Y, both directions, as
+    four frames: two materialized (an Arrow literal frame, a
+    localCheckpoint) and two derived, unmaterialized ones (a join and
+    a union+distinct over the literal frame)."""
+    from molgraphdb_spark.functions.literals import literal_df
+
+    path = ["A", "B", "C", "D", "E"]
+    pairs = list(zip(path, path[1:])) + [("X", "Y")]
+    rows = [(a, b, 1, 1, 0) for a, b in pairs] + [(b, a, -1, -1, 0) for a, b in pairs]
+    lit = literal_df(spark, rows, ["src", "dst", "diff_atom", "diff_bond", "subs"])
+    return {
+        "literal": lit,
+        "checkpointed": edges_from_rows(spark, rows).localCheckpoint(),
+        "joined": lit.join(lit.select("dst").distinct().withColumnRenamed("dst", "src"), "src"),
+        "union_distinct": lit.filter("diff_atom > 0")
+        .unionByName(lit.filter("diff_atom < 0"))
+        .distinct(),
+    }
+
+
+def test_bfs_materialized_and_derived_edges_agree(spark):
+    # bfs_query reads a materialized edge frame as it is and
+    # checkpoints a derived one once; the answers must not depend on it
+    from molgraphdb_spark.operators.graph import _materialized
+
+    frames = _path_edges(spark)
+    assert {name: _materialized(df) for name, df in frames.items()} == {
+        "literal": True,
+        "checkpointed": True,
+        "joined": False,
+        "union_distinct": False,
+    }
+    requests = [
+        ("A", "A", 100, 1),  # same vertex
+        ("A", "B", 100, 2),
+        ("A", "C", 100, 3),
+        ("E", "B", 100, 4),
+        ("A", "E", 100, 5),  # 4 edges
+        ("A", "X", 100, -1),  # unreachable
+        ("A", "E", 3, -1),  # max_depth cut-off
+        ("A", "D", 3, 4),  # reached on the last allowed wave
+    ]
+    for name, df in frames.items():
+        got = [bfs_query(df, a, b, max_depth=d) for a, b, d, _ in requests]
+        assert got == [want for *_, want in requests], name
+
+
 def test_stats_unique_molecules(edges):
     stats = graph_stats(edges)
     assert stats["unique_molecules"] == 6

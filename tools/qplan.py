@@ -3,9 +3,10 @@ the plans/r<N>/<query>_{before,after}.txt deliverable writer.
 
     python tools/qplan.py [sf_dir] [-o OUTDIR] [-s SUFFIX] [-u] query ...
 
-``-u`` (uncut, r15): monkeypatch localCheckpoint to identity so plans
-show the pre-checkpoint pipeline a checkpointed query hides behind
-Scan ExistingRDD. Measurement-only: repeated references to a
+``-u`` (uncut, r15): monkeypatch localCheckpoint to identity (plus a
+count() for eager calls, so Observation-gated loops still advance) so
+plans show the pre-checkpoint pipeline a checkpointed query hides
+behind Scan ExistingRDD. Measurement-only: repeated references to a
 checkpointed relation then RE-EXPAND in the dumped tree (logically —
 the real execution materializes them once), so uncut dumps evidence
 expression/operator shapes, not execution counts."""
@@ -19,6 +20,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from molgraphdb_spark.registry import all_queries
 from molgraphdb_spark.session import get_spark, tune
+
+
+def _uncut(self, eager=True):
+    """``-u``'s localCheckpoint: no lineage cut, but an eager call still
+    runs one cheap action (count), because loops gated on an
+    Observation of the checkpointed frame (connected_components, BFS,
+    the expand_relations wave loop) would otherwise wait forever for
+    metrics no job ever reports."""
+    if eager:
+        self.count()
+    return self
 
 
 def main() -> int:
@@ -37,11 +49,11 @@ def main() -> int:
         args.remove("-u")
         from pyspark.sql import DataFrame
 
-        DataFrame.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
+        DataFrame.localCheckpoint = _uncut  # type: ignore[method-assign]
         try:  # Spark 4: the runtime instance is the classic subclass
             from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
-            _CDF.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
+            _CDF.localCheckpoint = _uncut  # type: ignore[method-assign]
         except ImportError:
             pass
     sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
