@@ -8,12 +8,22 @@ stored twice, once per direction with negated diffs
 (/root/reference/main.py:113–114). Vertices are implicit — the distinct
 endpoints (/root/reference/main.py:316–317).
 
-Graph analytics run as batch jobs over the edge DataFrame (GraphX/
-GraphFrames-style iterative joins), NOT as per-query OLTP traversals:
-each BFS wave is one hash join frontier ⋈ edges with anti-join visited
-pruning — the Pregel pattern expressed in DataFrames.
+Two access paths, split by the size cap ``BFS_INDEX_MAX_EDGES``:
+- Requests — :func:`bfs_query` and :func:`shortest_paths`, the
+  point-to-point lookups the reference answers with one indexed SQLite
+  query per wave (main.py:272–305) — run on the driver over a CSR
+  adjacency index, collected once per edge frame and cached for
+  materialized frames, so a request starts no Spark job.
+- Analytics — :func:`bfs_distances`, :func:`multi_bfs_distances`,
+  PageRank, components, cores, triangles — run as batch jobs over the
+  edge DataFrame (GraphX/GraphFrames-style iterative joins): each BFS
+  wave is one hash join frontier ⋈ edges with anti-join visited
+  pruning — the Pregel pattern expressed in DataFrames. Requests over
+  an edge frame above the cap run the same loop with a target set.
 
 Scale notes (100 TB):
+- The request index would be a src-sorted edge table, read one
+  frontier at a time by predicate pushdown on ``src``.
 - The edge table would be bucketed by ``src`` on a real cluster so
   every frontier⋈edges wave is a co-partitioned join (no edge shuffle;
   only the small frontier moves). ``repartition(src)`` + cache here.
@@ -26,6 +36,9 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import weakref
+
+import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -87,14 +100,21 @@ def graph_stats(edges: DataFrame) -> dict:
     return {"unique_molecules": row.unique_molecules, "n_edges": row.n_edges}
 
 
-def _materialized(df: DataFrame) -> bool:
-    """True when ``df``'s optimized plan is already a leaf that costs
-    nothing to re-read: a driver-side ``LocalRelation`` (literal_df,
-    small createDataFrame) or a ``LogicalRDD`` over a checkpointed RDD
-    (localCheckpoint)."""
+def _leaf(df: DataFrame) -> str | None:
+    """"LocalRelation" when ``df``'s optimized plan is a driver-side
+    ``LocalRelation`` (literal_df, small createDataFrame), "LogicalRDD"
+    when it is a ``LogicalRDD`` over a checkpointed RDD
+    (localCheckpoint), else None. Either leaf costs nothing to re-read
+    and never changes."""
     plan = df._jdf.queryExecution().optimizedPlan()
     kind = plan.getClass().getSimpleName()
-    return kind == "LocalRelation" or (kind == "LogicalRDD" and plan.rdd().isCheckpointed())
+    leaf = kind == "LocalRelation" or (kind == "LogicalRDD" and plan.rdd().isCheckpointed())
+    return kind if leaf else None
+
+
+def _materialized(df: DataFrame) -> bool:
+    """True when ``df`` is one of the leaves of :func:`_leaf`."""
+    return _leaf(df) is not None
 
 
 def _bfs_edges(edges: DataFrame) -> DataFrame:
@@ -110,141 +130,216 @@ def _bfs_edges(edges: DataFrame) -> DataFrame:
     return pairs if _materialized(edges) else pairs.localCheckpoint()
 
 
-def _bfs_waves(
+def multi_bfs_distances(
     edges: DataFrame,
-    source: str | int,
-    max_depth: int,
-    target: str | int | None,
-) -> tuple[DataFrame, int | None]:
-    """The single-source wave loop behind :func:`bfs_distances` and
-    :func:`bfs_query`: returns (visited(id, dist), depth at which
-    ``target`` was reached or None)."""
+    seeds: list[str | int],
+    max_depth: int = 100,
+    targets: list[str | int] | None = None,
+) -> DataFrame:
+    """BFS from ALL ``seeds`` in one wave loop; returns
+    (seed, id, dist) for every (seed → vertex) pair reached within
+    ``max_depth`` edges (dist = edge count). Ids are strings or ints.
+
+    The scale point vs one loop per seed: K single-source runs pay K×
+    the wave-loop job overhead and scan the edge table K× per depth
+    level; here the frontier is keyed by (seed, id), so ONE join per
+    wave advances every seed's wavefront simultaneously — the standard
+    multi-source BFS batching of the reference's wavefront loop
+    (main.py:283–303): frontier ⋈ edges on src, then a left-anti join
+    against the visited set.
+
+    With ``targets`` the loop stops after the wave in which every seed
+    has reached every target (main.py:292–293); the result then holds
+    only the waves that ran. ``multi_bfs_distances.last_waves`` records
+    how many waves the most recent call ran."""
     spark = edges.sparkSession
     edges = _bfs_edges(edges)
-    # One-row seed over spark.range, left lazy: a createDataFrame seed
-    # would drag a Python pickle stage into every wave's job graph, and
-    # checkpointing a one-row frame is a job per query for nothing.
-    id_lit = F.lit(source).cast("long") if isinstance(source, int) else F.lit(source)
-    visited = spark.range(1).select(id_lit.alias("id"), F.lit(0).cast("long").alias("dist"))
-    if target is not None and source == target:
-        return visited, 0
+    # dedupe seeds (order-preserving): a duplicate entry would seed
+    # visited twice and silently double every downstream per-seed
+    # aggregate (r6 advice)
+    seeds = list(dict.fromkeys(seeds))
+    seed_arr = F.array(*[F.lit(s).cast("long") if isinstance(s, int) else F.lit(s) for s in seeds])
+    # One-row seed over spark.range, left lazy: checkpointing it is a
+    # job per call for nothing.
+    visited = (
+        spark.range(1)
+        .select(F.explode(seed_arr).alias("seed"))
+        .select("seed", F.col("seed").alias("id"), F.lit(0).cast("long").alias("dist"))
+    )
+    targets = list(dict.fromkeys(targets or []))
+    hit = F.col("id").isin(targets) if targets else F.lit(False)
+    pending = len(seeds) * len(targets) - sum(s in targets for s in seeds)
     frontier = visited
+    multi_bfs_distances.last_waves = 0
     for depth in range(1, max_depth + 1):
+        if targets and not pending:
+            break
+        multi_bfs_distances.last_waves = depth
         # No forced broadcast: wave-1 frontiers are tiny (AQE
         # broadcasts them), but mid-BFS frontiers can be a large share
         # of the graph — forcing those through a broadcast is a driver
         # OOM at scale. AQE picks per-wave using checkpointed stats.
         candidates = (
             frontier.join(edges, frontier.id == edges.src)
-            .select(F.col("dst").alias("id"))
+            .select("seed", F.col("dst").alias("id"))
             .distinct()
         )
         # ONE job per wave: the frontier-size and target-hit probes are
         # Observation metrics on the checkpoint job itself (same
         # pattern as connected_components), not separate count() jobs.
         obs = Observation()
-        tgt = (
-            (F.col("id") == target).cast("long")
-            if target is not None
-            else F.lit(0).cast("long")
-        )
         new_frontier = (
-            candidates.join(visited.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .observe(obs, F.count(F.lit(1)).alias("n"), F.sum(tgt).alias("hit"))
+            candidates.join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
+            .withColumn("dist", F.lit(depth).cast("long"))
+            .observe(obs, F.count(F.lit(1)).alias("n"), F.sum(hit.cast("long")).alias("hit"))
             .localCheckpoint()  # truncate lineage per wave
         )
         got = obs.get
         if not got.get("n"):
             break
         # Lazy union: children are all checkpointed RDDs, so the chain
-        # stays shallow and next wave's anti-join reads them directly —
-        # no extra materialization job per wave.
+        # stays shallow and next wave's anti-join reads them directly.
         visited = visited.unionByName(new_frontier)
-        if got.get("hit"):
-            return visited, depth
-        frontier = new_frontier
-    return visited, None
-
-
-def bfs_distances(
-    edges: DataFrame,
-    source: str | int,
-    max_depth: int = 100,
-    target: str | int | None = None,
-) -> DataFrame:
-    """Per-wave frontier BFS from ``source``; returns (id, dist) for
-    every vertex reached within ``max_depth`` edges (dist = edge count).
-
-    Implements the reference's wavefront loop
-    (reference main.py:283–303): each wave is
-    frontier ⋈ edges on src (J1) followed by a left-anti join against
-    the visited set (J2/P5). Early-exits when ``target`` is reached
-    (main.py:292–293) or the frontier empties.
-    """
-    return _bfs_waves(edges, source, max_depth, target)[0]
-
-
-def multi_bfs_distances(
-    edges: DataFrame, seeds: list[int], max_depth: int = 100
-) -> DataFrame:
-    """BFS from ALL ``seeds`` in one wave loop; returns
-    (seed, id, dist) for every (seed → vertex) pair reached within
-    ``max_depth`` edges.
-
-    The scale point vs running :func:`bfs_distances` per seed: K
-    single-source runs pay K× the wave-loop job overhead and scan the
-    edge table K× per depth level; here the frontier is keyed by
-    (seed, id), so ONE join per wave advances every seed's wavefront
-    simultaneously — the standard multi-source BFS batching (the same
-    frontier⋈edges / anti-join-visited shape as the single-source
-    loop, reference main.py:283–303, just with the seed column carried
-    through)."""
-    spark = edges.sparkSession
-    edges = _bfs_edges(edges)
-    # dedupe seeds (order-preserving): a duplicate entry would seed
-    # visited twice and silently double every downstream per-seed
-    # aggregate (r6 advice)
-    seeds = list(dict.fromkeys(int(s) for s in seeds))
-    seed_arr = F.array(*[F.lit(s).cast("long") for s in seeds])
-    visited = (
-        spark.range(1)
-        .select(F.explode(seed_arr).alias("seed"))
-        .select("seed", F.col("seed").alias("id"), F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
-    )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        candidates = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select("seed", F.col("dst").alias("id"))
-            .distinct()
-        )
-        obs = Observation()
-        new_frontier = (
-            candidates.join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("long"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        if not obs.get.get("n"):
-            break
-        visited = visited.unionByName(new_frontier)
+        pending -= got.get("hit")
         frontier = new_frontier
     return visited
 
 
+def bfs_distances(edges: DataFrame, source: str | int, max_depth: int = 100) -> DataFrame:
+    """(id, dist) for every vertex reached from ``source`` within
+    ``max_depth`` edges (dist = edge count): the one-seed case of
+    :func:`multi_bfs_distances`."""
+    return multi_bfs_distances(edges, [source], max_depth).select("id", "dist")
+
+
+#: Largest edge frame, in directed edges, whose request index is held
+#: on the driver (its neighbour array holds one int64 per edge, beside
+#: the distinct ids). Requests over a larger frame run the Spark wave
+#: loop of multi_bfs_distances.
+BFS_INDEX_MAX_EDGES = 2_000_000
+
+
+#: Request indexes of materialized edge frames, keyed by the frame
+#: object (DataFrame hashes by identity); an entry dies with its frame.
+#: None marks a frame above BFS_INDEX_MAX_EDGES.
+_INDEX_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _build_index(edges: DataFrame, local: bool) -> tuple | None:
+    """The CSR adjacency (ids, offsets, nbrs) of ``edges`` from one
+    collect, or None above BFS_INDEX_MAX_EDGES: ``ids`` are the sorted
+    distinct endpoints and the out-neighbours of ``ids[i]`` are
+    ``ids[nbrs[offsets[i]:offsets[i + 1]]]``. A ``local``
+    (LocalRelation) frame is read by ``collect()``, which returns its
+    driver-resident rows without a Spark job; any other through Arrow."""
+    proj = edges.select("src", "dst").dropna().limit(BFS_INDEX_MAX_EDGES + 1)
+    if local:
+        rows = proj.collect()
+        src, dst = (np.array([r[i] for r in rows], dtype=object) for i in (0, 1))
+    else:
+        table = proj.toArrow()
+        src, dst = (table.column(c).to_numpy(zero_copy_only=False) for c in ("src", "dst"))
+    if len(src) > BFS_INDEX_MAX_EDGES:
+        return None
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = inv[: len(src)], inv[len(src) :]
+    offsets = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(s, minlength=len(ids)), out=offsets[1:])
+    return ids, offsets, d[np.argsort(s, kind="stable")].astype(np.int64)
+
+
+def _request_index(edges: DataFrame) -> tuple | None:
+    """The index of ``edges``: built once for a materialized frame (an
+    immutable leaf), rebuilt per call for any other."""
+    if edges in _INDEX_CACHE:
+        return _INDEX_CACHE[edges]
+    leaf = _leaf(edges)
+    index = _build_index(edges, local=leaf == "LocalRelation")
+    if leaf:
+        _INDEX_CACHE[edges] = index
+    return index
+
+
+def _forward_bfs(index: tuple, source: int, targets: set[int], max_depth: int) -> dict[int, int]:
+    """Edge distance from position ``source`` to each position of
+    ``targets`` reached within ``max_depth`` edges; stops once all are
+    reached. One vectorized gather of the frontier's out-edges per
+    wave."""
+    _, offsets, nbrs = index
+    seen = np.zeros(len(offsets) - 1, dtype=bool)
+    seen[source] = True
+    frontier = np.array([source], dtype=np.int64)
+    found: dict[int, int] = {}
+    for depth in range(1, max_depth + 1):
+        if len(found) == len(targets) or not frontier.size:
+            break
+        lo, n = offsets[frontier], offsets[frontier + 1] - offsets[frontier]
+        ends = np.cumsum(n)
+        reached = np.unique(nbrs[np.repeat(lo - ends + n, n) + np.arange(ends[-1])])
+        frontier = reached[~seen[reached]]
+        seen[frontier] = True
+        found.update((t, depth) for t in targets - found.keys() if seen[t])
+    return found
+
+
+def _index_distances(index: tuple, asked: list[tuple], max_depth: int) -> dict[tuple, int]:
+    """{(a, b): edges} for the pairs of ``asked`` connected within
+    ``max_depth`` edges: one forward BFS per distinct source."""
+    ids = index[0]
+
+    def position(v) -> int | None:
+        i = int(np.searchsorted(ids, v))
+        return i if i < len(ids) and ids[i] == v else None
+
+    by_source: dict = {}
+    for a, b in asked:
+        by_source.setdefault(a, set()).add(b)
+    dist = {}
+    for a, bs in by_source.items():
+        s = position(a)
+        where = {p: b for b in bs if (p := position(b)) is not None}
+        if s is not None and where:
+            for p, d in _forward_bfs(index, s, set(where), max_depth).items():
+                dist[(a, where[p])] = d
+    return dist
+
+
+def _wave_distances(edges: DataFrame, asked: list[tuple], max_depth: int) -> dict[tuple, int]:
+    """:func:`_index_distances` by the Spark wave loop, for edge frames
+    above BFS_INDEX_MAX_EDGES: one multi-source BFS that stops once
+    every source has reached every target."""
+    targets = list(dict.fromkeys(b for _, b in asked))
+    dists = multi_bfs_distances(edges, [a for a, _ in asked], max_depth, targets=targets)
+    return {(r.seed, r.id): r.dist for r in dists.filter(F.col("id").isin(targets)).collect()}
+
+
+def shortest_paths(edges: DataFrame, pairs: list[tuple], max_depth: int = 100) -> list[int]:
+    """Shortest-path answers for ``pairs`` of (from, to) ids with the
+    reference's return convention (verified in SURVEY.md §3.1): the
+    number of NODES on the path — identical endpoints → 1, one edit
+    apart → 2 — and −1 when the target is unreachable within
+    ``max_depth`` edges or either endpoint is not in the graph
+    (reference main.py:272–305).
+
+    Answered by forward BFS over the driver-side CSR index of
+    ``edges`` (built once per materialized frame, so repeated requests
+    start no Spark job); frames above BFS_INDEX_MAX_EDGES run the Spark
+    wave loop instead."""
+    asked = [(a, b) for a, b in pairs if a != b]
+    dist = {}
+    if asked:
+        index = _request_index(edges)
+        if index is None:
+            dist = _wave_distances(edges, asked, max_depth)
+        else:
+            dist = _index_distances(index, asked, max_depth)
+    return [1 if a == b else dist[(a, b)] + 1 if (a, b) in dist else -1 for a, b in pairs]
+
+
 def bfs_query(edges: DataFrame, mol_from: str, mol_to: str, max_depth: int = 100) -> int:
-    """Shortest-path query with the reference's return convention
-    (verified in SURVEY.md §3.1): number of NODES on the path —
-    identical endpoints → 1, one edit apart → 2 — and −1 when
-    unreachable within ``max_depth`` waves
-    (reference main.py:272–305). The answer is the depth of the
-    wave whose target-hit Observation fired; no job runs after it."""
-    if mol_from == mol_to:
-        return 1
-    depth = _bfs_waves(edges, mol_from, max_depth, mol_to)[1]
-    return depth + 1 if depth is not None else -1
+    """One shortest-edit-path request: the one-pair case of
+    :func:`shortest_paths`."""
+    return shortest_paths(edges, [(mol_from, mol_to)], max_depth)[0]
 
 
 def pagerank(

@@ -14,8 +14,7 @@ contract — cosine in integer micro-basis-points (ubp), argmax ties to
 the lowest cid — so the paths are interchangeable and test-pinned
 equal (tests/test_kmeans.py::test_assign_probe_blas_matches_literal).
 
-The probe that measured this (tools/scale_probe.py ann_production,
-n=2M, K=1414) also surfaced the IVF skew failure mode: a drift-style
+The scale probe that measured this (n=2M, K=1414) also surfaced the IVF skew failure mode: a drift-style
 corpus collapsed 86% of vectors into one cell and stalled the
 shortlist equi-join. :func:`require_balanced_cells` is that rule as a
 callable — one groupBy over the assignment output, pennies next to
@@ -356,7 +355,7 @@ def assign_cells_balanced(
     ``stats["split_map"]``) sees the IDENTICAL candidate set as the
     unsplit index — recall is preserved by construction while the
     biggest equi-join partition shrinks by the split fan-out
-    (probe-measured: tools/scale_probe.py ann_hot_cell).
+    (probe-measured on a planted hot-cell corpus).
 
     Execution shape: the assignment output is ``persist()``-ed before
     the histogram job so the gate and the caller's downstream join
@@ -532,7 +531,7 @@ def shortlist_with_spill(
       brute-force scan of the inseparable cell — recall 1.0 on the
       spilled cell by construction (candidate set identical to the
       unsalted join; test-pinned in tests/test_ivf_dispatch.py, probed
-      with splits disabled in tools/scale_probe.py ann_hot_cell).
+      with splits disabled on a planted hot-cell corpus).
 
     Cost shape at 100 TB: anchor rows probing a spilled cell replicate
     ``n_salt``× (probe rows are the SMALL side — Q·nprobe rows), the

@@ -70,12 +70,16 @@ MAX_SHINGLE_DF = 1024
 _SEP = "\x1f"
 
 
+def _normalized(docs: DataFrame) -> DataFrame:
+    """(doc_id, whitespace-normalized lowercase text, token array)."""
+    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"[ \t\n\r\f]+", " "))
+    return docs.select("doc_id", norm.alias("norm"), F.split(norm, " ").alias("toks"))
+
+
 def _norm_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + whitespace-normalized lowercase text + token array."""
     tune(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"[ \t\n\r\f]+", " "))
-    return docs.select("doc_id", norm.alias("norm"), F.split(norm, " ").alias("toks"))
+    return _normalized(load_table(spark, sf_dir, "documents"))
 
 
 def _norm_docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,8 +105,7 @@ def _norm_docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if docs.rdd.getNumPartitions() < n_part:
         docs = docs.repartition(n_part)
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"[ \t\n\r\f]+", " "))
-    return docs.select("doc_id", norm.alias("norm"), F.split(norm, " ").alias("toks"))
+    return _normalized(docs)
 
 
 def _shingles_col(n: int = 3) -> Column:

@@ -364,7 +364,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked only while it provably fits, and a billion-node graph flips
     to shuffle-hash co-partitioned joins instead of silently OOMing
     on the broadcast (the former docstring promise, now shipped and
-    probe-measured in tools/scale_probe.probe_triangle_dispatch)."""
+    probe-measured on a planted graph above the cap)."""
     from molgraphdb_spark.operators.graph import triangle_count
 
     tune(spark)
@@ -573,9 +573,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pairing entirely (their per-pair weight 1/ln d is the
     SMALLEST of any contributor, while their pair count deg² is the
     largest — the exact df-cap trade). The registry entry keeps the
-    cap OFF (exact at gate scales); the planted-hot-customer probe
-    (tools/scale_probe.probe_copurchase_hotkey) measures both sides
-    and SCALE.md records the bound."""
+    cap OFF (exact at gate scales); a planted-hot-customer probe
+    measured both sides and SCALE.md records the bound."""
     tune(spark)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")

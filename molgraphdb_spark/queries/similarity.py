@@ -849,7 +849,7 @@ def embedding_hard_negatives_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors whose probed cells hold no same/different-label candidate
     carry NULLs, exactly like the probe-miss rows of an ANN service.
     Agreement with the exact twin is measured by the planted probe
-    (tools/scale_probe.py hard_negatives) and recorded in BASELINE.md.
+    and recorded in BASELINE.md.
 
     Scale shape: candidate volume is ~nprobe/K of the cross join. The
     constants here are test-scale (K=8); production sizes K ~ O(√n) so
@@ -884,7 +884,7 @@ def embedding_hard_negatives_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side) AND the nprobe probe cells (anchor side); the kernel is
     # K-dispatched (literal fold here at K=8, Arrow/BLAS above
     # ASSIGN_LITERAL_MAX_K — the production shape probed at n=2M,
-    # K=1414 in tools/scale_probe.py ann_production).
+    # K=1414).
     balanced_branch = len(cents) > ASSIGN_LITERAL_MAX_K
     if balanced_branch:
         # Production-K path: the SCALE.md §12 skew rule as an OPERATOR
@@ -895,8 +895,8 @@ def embedding_hard_negatives_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         # expand_probes rewrites split parents to their leaf children
         # on the anchor side, so the candidate set — and therefore
         # recall — is IDENTICAL to the unsplit index while the biggest
-        # join partition shrinks by the split fan-out (probe:
-        # tools/scale_probe.py ann_hot_cell). At the test-scale
+        # join partition shrinks by the split fan-out (measured on a
+        # planted hot-cell corpus). At the test-scale
         # literal K this branch is skipped: no extra job, registry
         # plans unchanged.
         assigned, cents, stats = assign_cells_balanced(

@@ -36,27 +36,6 @@ _QUERY_MODULES = [
 ]
 
 # ---------------------------------------------------------------
-# HISTORICAL RECORD, r10 window: 6 r10 debuts + 3 changed-code
-# re-gates + all 25 r5-stale + 16 r6-stale fills -> 50/50 green,
-# ledger floor r6. r11 window: 2 codec debuts (mm_decoded_jpeg/png)
-# + 21 changed-code re-gates (presentation-sort drops + ANN sentinel
-# fix) + ALL 27 r6-stale rows -> CORRECTNESS_r11.json 50/50 green,
-# 0 errors; ledger floor moved to r7 (43 rows). mm_chunk_windows was
-# displaced from the r11 window (its change was the identical
-# one-line terminal-sort drop as its three gated siblings).
-#
-# HISTORICAL RECORD, r12 window: doc_html_extract + mm_decoded_flac
-# (former never-driver-checked) + mm_chunk_windows + 4 changed-code
-# re-gates + ALL 43 r7-stale rows -> CORRECTNESS_r12.json 50/50 green,
-# 0 errors; ledger floor moved to r8 and — for the first time — zero
-# never-checked rows.
-#
-# HISTORICAL RECORD, r13 window (drove CORRECTNESS_r13.json 50/50
-# green, 0 errors; ledger floor moved r8 -> r9, 30 rows):
-# 2 r13 changed-code re-gates (similarity_ivfpq_topk,
-# embedding_hard_negatives_ann) + ALL 37 r8-stale rows + 11
-# whitespace-migration re-gates oldest-driver-first.
-#
 # Round-15 verification window (first 50), per the r14 verdict item 1
 # (staleness ledger = tools/gen_query_index.last_driver_green over all
 # fourteen CORRECTNESS_r*.json — recomputed this session: r10:18,
@@ -77,32 +56,6 @@ _QUERY_MODULES = [
 # 9 + 25 + 16 = 50 exactly; no fills needed. DISPLACED DEBT: the 48
 # r11-stale rows (agg_stats_lineitem ... window_running_total) are the
 # r16 window's floor after r15 debuts/changed-code re-gates.
-#
-# HISTORICAL RECORD, r14 window (drove CORRECTNESS_r14.json 50/50
-# green, 0 errors), per the r13 verdict item 2
-# (staleness ledger = tools/gen_query_index.last_driver_green over all
-# thirteen CORRECTNESS_r*.json — recomputed this session: r9:30,
-# r10:36, r11:48, r12:48, r13:50):
-# - 2 r14 changed-code re-gate leads: similarity_ivfpq_topk (the
-#   ivfpq_search rerank now reads the cid-pruned index instead of
-#   re-scanning the base table — r13 verdict item 1; pre-verified
-#   hash-identical at sf0.01) and embedding_hard_negatives_ann
-#   (spill_cids now routes through the shortlist_with_spill salted
-#   side channel — r13 verdict item 3; plan unchanged when no spills;
-#   pre-verified hash-identical at sf0.01).
-# - ALL 30 r9-stale rows (the entire staleness floor; includes the 3
-#   r9-displaced whitespace re-gates pipeline_curation_funnel,
-#   source_chunk_dup_rate, vocab_bpe_merge_pairs).
-# - 18 r10-stale fills: first the 7 r10-displaced whitespace-migration
-#   re-gates (dedup_minhash_lsh_pairs, doc_mixture_sample,
-#   doc_split_assign, lang_token_fertility, orders_retention_cohorts,
-#   source_token_divergence, vocab_bpe_merge_table), then 11 more
-#   r10-stale rows alphabetically.
-# 2 + 30 + 18 = 50 exactly. DISPLACED DEBT: 18 r10-stale rows remain
-# (pq_code_stats, q2/q4/q8/q9/q11/q12/q15/q16/q17/q20/q21,
-# sample_stratified_docs, setop_except/intersect/union_nations,
-# similarity_cosine_topk, skew_salted_status_counts) — the r15 window
-# MUST lead with r15 debuts/changed-code re-gates, then these 18.
 #
 # r13 window record (kept for the ledger trail):
 # Composition (staleness ledger = tools/gen_query_index

@@ -9,6 +9,8 @@ per SURVEY.md §3.1) and the idempotent-insert semantics
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from molgraphdb_spark.operators.graph import (
     append_edges,
@@ -108,6 +110,92 @@ def test_bfs_materialized_and_derived_edges_agree(spark):
     for name, df in frames.items():
         got = [bfs_query(df, a, b, max_depth=d) for a, b, d, _ in requests]
         assert got == [want for *_, want in requests], name
+
+
+def _dict_bfs_answer(edge_list, a, b, max_depth):
+    """Independent reference: level-by-level BFS over a dict adjacency,
+    answering in nodes on the path (1 same vertex, −1 unreachable or
+    unknown)."""
+    if a == b:
+        return 1
+    adj = {}
+    for s, d in edge_list:
+        adj.setdefault(s, set()).add(d)
+    seen, level = {a}, {a}
+    for depth in range(1, max_depth + 1):
+        level = {n for v in level for n in adj.get(v, ())} - seen
+        if b in level:
+            return depth + 1
+        seen |= level
+    return -1
+
+
+_VERTEX = st.sampled_from([f"m{i}" for i in range(12)])
+
+
+@given(
+    edge_list=st.lists(st.tuples(_VERTEX, _VERTEX), max_size=30),
+    isolated=st.lists(st.sampled_from(["iso0", "iso1"]), max_size=2),
+    requests=st.lists(
+        st.tuples(
+            st.one_of(_VERTEX, st.sampled_from(["iso0", "iso1", "unknown"])),
+            st.one_of(_VERTEX, st.sampled_from(["iso0", "iso1", "unknown"])),
+            st.integers(0, 6),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+)
+@settings(max_examples=40, deadline=None)
+def test_shortest_paths_match_dict_bfs(spark, edge_list, isolated, requests):
+    # directed graphs, not necessarily symmetric; an isolated vertex has
+    # no edge, so the edge frame does not know it (−1 unless same vertex)
+    from molgraphdb_spark.operators.graph import shortest_paths
+
+    df = edges_from_rows(spark, [(s, d, 0, 0, 0) for s, d in edge_list])
+    for depth in {d for *_, d in requests}:
+        pairs = [(a, b) for a, b, d in requests if d == depth] + [(v, v) for v in isolated]
+        want = [_dict_bfs_answer(edge_list, a, b, depth) for a, b in pairs]
+        assert shortest_paths(df, pairs, max_depth=depth) == want
+
+
+def test_index_cap_falls_back_to_wave_loop(spark, monkeypatch):
+    # above BFS_INDEX_MAX_EDGES requests run the Spark wave loop; the
+    # answers must not change, and the loop stops at the wave in which
+    # its last requested target is reached
+    from molgraphdb_spark.operators import graph
+
+    requests = [("A", "A"), ("A", "B"), ("A", "C"), ("E", "B"), ("A", "E"), ("A", "X"), ("Q", "A")]
+    want = graph.shortest_paths(_path_edges(spark)["literal"], requests)
+    assert want == [1, 2, 3, 4, 5, -1, -1]
+    monkeypatch.setattr(graph, "BFS_INDEX_MAX_EDGES", 1)
+    for name, df in _path_edges(spark).items():
+        assert graph.shortest_paths(df, requests) == want, name
+        assert graph.shortest_paths(df, [("A", "C")], max_depth=1) == [-1], name
+        # A reaches C on wave 2; without targets the loop runs 5 waves
+        assert graph.shortest_paths(df, [("A", "C")]) == [3], name
+        assert graph.multi_bfs_distances.last_waves == 2, name
+    graph.multi_bfs_distances(_path_edges(spark)["literal"], ["A"])
+    assert graph.multi_bfs_distances.last_waves == 5
+
+
+def test_bfs_query_on_literal_frame_starts_no_job(spark, monkeypatch):
+    # a LocalRelation edge frame is read without a Spark job and its
+    # index is built once, on the first request
+    from molgraphdb_spark.operators import graph
+
+    built = []
+    build = graph._build_index
+    monkeypatch.setattr(graph, "_build_index", lambda *a, **k: built.append(1) or build(*a, **k))
+    df = _path_edges(spark)["literal"]
+    sc = spark.sparkContext
+    sc.setJobGroup("bfs-query-jobs", "bfs_query job count")
+    try:
+        assert [graph.bfs_query(df, "A", "E"), graph.bfs_query(df, "E", "C")] == [5, 3]
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("bfs-query-jobs") == []
+    assert built == [1]
 
 
 def test_stats_unique_molecules(edges):
