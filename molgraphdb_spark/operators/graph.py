@@ -8,18 +8,19 @@ stored twice, once per direction with negated diffs
 (/root/reference/main.py:113–114). Vertices are implicit — the distinct
 endpoints (/root/reference/main.py:316–317).
 
-Two access paths, split by the size cap ``BFS_INDEX_MAX_EDGES``:
-- Requests — :func:`bfs_query` and :func:`shortest_paths`, the
-  point-to-point lookups the reference answers with one indexed SQLite
-  query per wave (main.py:272–305) — run on the driver over a CSR
-  adjacency index, collected once per edge frame and cached for
-  materialized frames, so a request starts no Spark job.
+Two access paths:
+- Requests — :func:`bfs_query`, the point-to-point lookup the
+  reference answers with one indexed SQLite query per wave
+  (main.py:272–305) — run on the driver over a CSR adjacency index,
+  collected once per materialized edge frame up to the size cap
+  ``BFS_INDEX_MAX_EDGES`` and cached, so a request starts no Spark job.
 - Analytics — :func:`bfs_distances`, :func:`multi_bfs_distances`,
   PageRank, components, cores, triangles — run as batch jobs over the
   edge DataFrame (GraphX/GraphFrames-style iterative joins): each BFS
   wave is one hash join frontier ⋈ edges with anti-join visited
   pruning — the Pregel pattern expressed in DataFrames. Requests over
-  an edge frame above the cap run the same loop with a target set.
+  a derived edge frame, or one above the cap, run the same loop with a
+  target.
 
 Scale notes (100 TB):
 - The request index would be a src-sorted edge table, read one
@@ -100,21 +101,14 @@ def graph_stats(edges: DataFrame) -> dict:
     return {"unique_molecules": row.unique_molecules, "n_edges": row.n_edges}
 
 
-def _leaf(df: DataFrame) -> str | None:
-    """"LocalRelation" when ``df``'s optimized plan is a driver-side
-    ``LocalRelation`` (literal_df, small createDataFrame), "LogicalRDD"
-    when it is a ``LogicalRDD`` over a checkpointed RDD
-    (localCheckpoint), else None. Either leaf costs nothing to re-read
-    and never changes."""
+def _materialized(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is already a leaf that costs
+    nothing to re-read: a driver-side ``LocalRelation`` (literal_df,
+    small createDataFrame) or a ``LogicalRDD`` over a checkpointed RDD
+    (localCheckpoint)."""
     plan = df._jdf.queryExecution().optimizedPlan()
     kind = plan.getClass().getSimpleName()
-    leaf = kind == "LocalRelation" or (kind == "LogicalRDD" and plan.rdd().isCheckpointed())
-    return kind if leaf else None
-
-
-def _materialized(df: DataFrame) -> bool:
-    """True when ``df`` is one of the leaves of :func:`_leaf`."""
-    return _leaf(df) is not None
+    return kind == "LocalRelation" or (kind == "LogicalRDD" and plan.rdd().isCheckpointed())
 
 
 def _bfs_edges(edges: DataFrame) -> DataFrame:
@@ -134,7 +128,7 @@ def multi_bfs_distances(
     edges: DataFrame,
     seeds: list[str | int],
     max_depth: int = 100,
-    targets: list[str | int] | None = None,
+    target: str | int | None = None,
 ) -> DataFrame:
     """BFS from ALL ``seeds`` in one wave loop; returns
     (seed, id, dist) for every (seed → vertex) pair reached within
@@ -148,10 +142,9 @@ def multi_bfs_distances(
     (main.py:283–303): frontier ⋈ edges on src, then a left-anti join
     against the visited set.
 
-    With ``targets`` the loop stops after the wave in which every seed
-    has reached every target (main.py:292–293); the result then holds
-    only the waves that ran. ``multi_bfs_distances.last_waves`` records
-    how many waves the most recent call ran."""
+    With ``target`` the loop stops after the wave in which every seed
+    has reached it (main.py:292–293); the result then holds only the
+    waves that ran."""
     spark = edges.sparkSession
     edges = _bfs_edges(edges)
     # dedupe seeds (order-preserving): a duplicate entry would seed
@@ -166,15 +159,12 @@ def multi_bfs_distances(
         .select(F.explode(seed_arr).alias("seed"))
         .select("seed", F.col("seed").alias("id"), F.lit(0).cast("long").alias("dist"))
     )
-    targets = list(dict.fromkeys(targets or []))
-    hit = F.col("id").isin(targets) if targets else F.lit(False)
-    pending = len(seeds) * len(targets) - sum(s in targets for s in seeds)
+    hit = F.lit(False) if target is None else F.col("id") == F.lit(target)
+    pending = len(seeds) - (target in seeds)
     frontier = visited
-    multi_bfs_distances.last_waves = 0
     for depth in range(1, max_depth + 1):
-        if targets and not pending:
+        if target is not None and not pending:
             break
-        multi_bfs_distances.last_waves = depth
         # No forced broadcast: wave-1 frontiers are tiny (AQE
         # broadcasts them), but mid-BFS frontiers can be a large share
         # of the graph — forcing those through a broadcast is a driver
@@ -212,11 +202,16 @@ def bfs_distances(edges: DataFrame, source: str | int, max_depth: int = 100) -> 
     return multi_bfs_distances(edges, [source], max_depth).select("id", "dist")
 
 
-#: Largest edge frame, in directed edges, whose request index is held
-#: on the driver (its neighbour array holds one int64 per edge, beside
-#: the distinct ids). Requests over a larger frame run the Spark wave
-#: loop of multi_bfs_distances.
-BFS_INDEX_MAX_EDGES = 2_000_000
+#: Largest edge frame, in directed edges, whose request index is built
+#: on the driver; requests over a larger frame run the Spark wave loop
+#: of multi_bfs_distances. The build holds every collected Row at once:
+#: on a checkpointed frame of 8 edges per vertex with 30-character ids
+#: (4-core Xeon, local[2], 8g driver) it took 1.3 s and +135 MB peak
+#: Python RSS at 250k edges, 4.9 s and +540 MB at 1M, and 10.4 s and
+#: +1.07 GB at 2M. The cap keeps the one-off build near 5 s and 0.5 GB;
+#: the built index itself is small (one int64 per edge plus the ids),
+#: and a request over it took about 1 ms at every size.
+BFS_INDEX_MAX_EDGES = 1_000_000
 
 
 #: Request indexes of materialized edge frames, keyed by the frame
@@ -225,22 +220,16 @@ BFS_INDEX_MAX_EDGES = 2_000_000
 _INDEX_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _build_index(edges: DataFrame, local: bool) -> tuple | None:
+def _build_index(edges: DataFrame) -> tuple | None:
     """The CSR adjacency (ids, offsets, nbrs) of ``edges`` from one
     collect, or None above BFS_INDEX_MAX_EDGES: ``ids`` are the sorted
     distinct endpoints and the out-neighbours of ``ids[i]`` are
-    ``ids[nbrs[offsets[i]:offsets[i + 1]]]``. A ``local``
-    (LocalRelation) frame is read by ``collect()``, which returns its
-    driver-resident rows without a Spark job; any other through Arrow."""
-    proj = edges.select("src", "dst").dropna().limit(BFS_INDEX_MAX_EDGES + 1)
-    if local:
-        rows = proj.collect()
-        src, dst = (np.array([r[i] for r in rows], dtype=object) for i in (0, 1))
-    else:
-        table = proj.toArrow()
-        src, dst = (table.column(c).to_numpy(zero_copy_only=False) for c in ("src", "dst"))
-    if len(src) > BFS_INDEX_MAX_EDGES:
+    ``ids[nbrs[offsets[i]:offsets[i + 1]]]``. On a LocalRelation frame
+    the collect reads the driver-side rows without a Spark job."""
+    rows = edges.select("src", "dst").dropna().limit(BFS_INDEX_MAX_EDGES + 1).collect()
+    if len(rows) > BFS_INDEX_MAX_EDGES:
         return None
+    src, dst = (np.array([r[i] for r in rows], dtype=object) for i in (0, 1))
     ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     s, d = inv[: len(src)], inv[len(src) :]
     offsets = np.zeros(len(ids) + 1, dtype=np.int64)
@@ -249,97 +238,61 @@ def _build_index(edges: DataFrame, local: bool) -> tuple | None:
 
 
 def _request_index(edges: DataFrame) -> tuple | None:
-    """The index of ``edges``: built once for a materialized frame (an
-    immutable leaf), rebuilt per call for any other."""
-    if edges in _INDEX_CACHE:
-        return _INDEX_CACHE[edges]
-    leaf = _leaf(edges)
-    index = _build_index(edges, local=leaf == "LocalRelation")
-    if leaf:
-        _INDEX_CACHE[edges] = index
-    return index
+    """The index of a materialized (immutable leaf) edge frame, built
+    on its first request; None for a derived frame, which is not
+    collected at all, or for one above BFS_INDEX_MAX_EDGES."""
+    if edges not in _INDEX_CACHE:
+        if not _materialized(edges):
+            return None
+        _INDEX_CACHE[edges] = _build_index(edges)
+    return _INDEX_CACHE[edges]
 
 
-def _forward_bfs(index: tuple, source: int, targets: set[int], max_depth: int) -> dict[int, int]:
-    """Edge distance from position ``source`` to each position of
-    ``targets`` reached within ``max_depth`` edges; stops once all are
-    reached. One vectorized gather of the frontier's out-edges per
-    wave."""
+def _forward_bfs(index: tuple, source: int, target: int, max_depth: int) -> int | None:
+    """Edge distance from position ``source`` to position ``target``,
+    or None when it is not reached within ``max_depth`` edges. One
+    vectorized gather of the frontier's out-edges per wave."""
     _, offsets, nbrs = index
     seen = np.zeros(len(offsets) - 1, dtype=bool)
     seen[source] = True
     frontier = np.array([source], dtype=np.int64)
-    found: dict[int, int] = {}
     for depth in range(1, max_depth + 1):
-        if len(found) == len(targets) or not frontier.size:
+        if not frontier.size:
             break
         lo, n = offsets[frontier], offsets[frontier + 1] - offsets[frontier]
         ends = np.cumsum(n)
         reached = np.unique(nbrs[np.repeat(lo - ends + n, n) + np.arange(ends[-1])])
         frontier = reached[~seen[reached]]
         seen[frontier] = True
-        found.update((t, depth) for t in targets - found.keys() if seen[t])
-    return found
-
-
-def _index_distances(index: tuple, asked: list[tuple], max_depth: int) -> dict[tuple, int]:
-    """{(a, b): edges} for the pairs of ``asked`` connected within
-    ``max_depth`` edges: one forward BFS per distinct source."""
-    ids = index[0]
-
-    def position(v) -> int | None:
-        i = int(np.searchsorted(ids, v))
-        return i if i < len(ids) and ids[i] == v else None
-
-    by_source: dict = {}
-    for a, b in asked:
-        by_source.setdefault(a, set()).add(b)
-    dist = {}
-    for a, bs in by_source.items():
-        s = position(a)
-        where = {p: b for b in bs if (p := position(b)) is not None}
-        if s is not None and where:
-            for p, d in _forward_bfs(index, s, set(where), max_depth).items():
-                dist[(a, where[p])] = d
-    return dist
-
-
-def _wave_distances(edges: DataFrame, asked: list[tuple], max_depth: int) -> dict[tuple, int]:
-    """:func:`_index_distances` by the Spark wave loop, for edge frames
-    above BFS_INDEX_MAX_EDGES: one multi-source BFS that stops once
-    every source has reached every target."""
-    targets = list(dict.fromkeys(b for _, b in asked))
-    dists = multi_bfs_distances(edges, [a for a, _ in asked], max_depth, targets=targets)
-    return {(r.seed, r.id): r.dist for r in dists.filter(F.col("id").isin(targets)).collect()}
-
-
-def shortest_paths(edges: DataFrame, pairs: list[tuple], max_depth: int = 100) -> list[int]:
-    """Shortest-path answers for ``pairs`` of (from, to) ids with the
-    reference's return convention (verified in SURVEY.md §3.1): the
-    number of NODES on the path — identical endpoints → 1, one edit
-    apart → 2 — and −1 when the target is unreachable within
-    ``max_depth`` edges or either endpoint is not in the graph
-    (reference main.py:272–305).
-
-    Answered by forward BFS over the driver-side CSR index of
-    ``edges`` (built once per materialized frame, so repeated requests
-    start no Spark job); frames above BFS_INDEX_MAX_EDGES run the Spark
-    wave loop instead."""
-    asked = [(a, b) for a, b in pairs if a != b]
-    dist = {}
-    if asked:
-        index = _request_index(edges)
-        if index is None:
-            dist = _wave_distances(edges, asked, max_depth)
-        else:
-            dist = _index_distances(index, asked, max_depth)
-    return [1 if a == b else dist[(a, b)] + 1 if (a, b) in dist else -1 for a, b in pairs]
+        if seen[target]:
+            return depth
+    return None
 
 
 def bfs_query(edges: DataFrame, mol_from: str, mol_to: str, max_depth: int = 100) -> int:
-    """One shortest-edit-path request: the one-pair case of
-    :func:`shortest_paths`."""
-    return shortest_paths(edges, [(mol_from, mol_to)], max_depth)[0]
+    """Shortest path mol_from → mol_to with the reference's return
+    convention (verified in SURVEY.md §3.1): the number of NODES on the
+    path — identical endpoints → 1, one edit apart → 2 — and −1 when
+    the target is unreachable within ``max_depth`` edges or either
+    endpoint is not in the graph (reference main.py:272–305).
+
+    On a materialized edge frame this is a forward BFS over the cached
+    driver-side CSR index, so a request starts no Spark job. A derived
+    frame, or one above BFS_INDEX_MAX_EDGES, runs the Spark wave loop
+    from mol_from, which stops on the wave that reaches mol_to."""
+    if mol_from == mol_to:
+        return 1
+    index = _request_index(edges)
+    if index is None:
+        hit = multi_bfs_distances(edges, [mol_from], max_depth, target=mol_to)
+        rows = hit.filter(F.col("id") == mol_to).select("dist").collect()
+        return rows[0].dist + 1 if rows else -1
+    ids = index[0]
+    a, b = (int(i) for i in np.searchsorted(ids, np.array([mol_from, mol_to], dtype=object)))
+    if a == len(ids) or b == len(ids) or ids[a] != mol_from or ids[b] != mol_to:
+        return -1
+    dist = _forward_bfs(index, a, b, max_depth)
+    return -1 if dist is None else dist + 1
 
 
 def pagerank(

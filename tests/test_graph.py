@@ -138,8 +138,8 @@ _VERTEX = st.sampled_from([f"m{i}" for i in range(12)])
     isolated=st.lists(st.sampled_from(["iso0", "iso1"]), max_size=2),
     requests=st.lists(
         st.tuples(
-            st.one_of(_VERTEX, st.sampled_from(["iso0", "iso1", "unknown"])),
-            st.one_of(_VERTEX, st.sampled_from(["iso0", "iso1", "unknown"])),
+            st.one_of(_VERTEX, st.sampled_from(["iso0", "iso1", "m5x", "unknown"])),
+            st.one_of(_VERTEX, st.sampled_from(["iso0", "iso1", "m5x", "unknown"])),
             st.integers(0, 6),
         ),
         min_size=1,
@@ -147,36 +147,49 @@ _VERTEX = st.sampled_from([f"m{i}" for i in range(12)])
     ),
 )
 @settings(max_examples=40, deadline=None)
-def test_shortest_paths_match_dict_bfs(spark, edge_list, isolated, requests):
+def test_bfs_query_matches_dict_bfs(spark, edge_list, isolated, requests):
     # directed graphs, not necessarily symmetric; an isolated vertex has
     # no edge, so the edge frame does not know it (−1 unless same vertex)
-    from molgraphdb_spark.operators.graph import shortest_paths
-
     df = edges_from_rows(spark, [(s, d, 0, 0, 0) for s, d in edge_list])
-    for depth in {d for *_, d in requests}:
-        pairs = [(a, b) for a, b, d in requests if d == depth] + [(v, v) for v in isolated]
-        want = [_dict_bfs_answer(edge_list, a, b, depth) for a, b in pairs]
-        assert shortest_paths(df, pairs, max_depth=depth) == want
+    requests = requests + [(v, v, 0) for v in isolated]
+    got = [bfs_query(df, a, b, max_depth=d) for a, b, d in requests]
+    assert got == [_dict_bfs_answer(edge_list, a, b, d) for a, b, d in requests]
 
 
 def test_index_cap_falls_back_to_wave_loop(spark, monkeypatch):
     # above BFS_INDEX_MAX_EDGES requests run the Spark wave loop; the
     # answers must not change, and the loop stops at the wave in which
-    # its last requested target is reached
+    # the target is reached (one localCheckpoint per wave, plus one for
+    # the edge table of a derived frame). A derived frame is never
+    # collected for an index: only the two materialized frames are.
     from molgraphdb_spark.operators import graph
 
     requests = [("A", "A"), ("A", "B"), ("A", "C"), ("E", "B"), ("A", "E"), ("A", "X"), ("Q", "A")]
-    want = graph.shortest_paths(_path_edges(spark)["literal"], requests)
+    lit = _path_edges(spark)["literal"]
+    want = [graph.bfs_query(lit, a, b) for a, b in requests]
     assert want == [1, 2, 3, 4, 5, -1, -1]
+    frames = _path_edges(spark)
+    checkpoints, built = [], []
+    build = graph._build_index
+    monkeypatch.setattr(graph, "_build_index", lambda df: built.append(1) or build(df))
+    cls = type(lit)
+    local_checkpoint = cls.localCheckpoint
     monkeypatch.setattr(graph, "BFS_INDEX_MAX_EDGES", 1)
-    for name, df in _path_edges(spark).items():
-        assert graph.shortest_paths(df, requests) == want, name
-        assert graph.shortest_paths(df, [("A", "C")], max_depth=1) == [-1], name
-        # A reaches C on wave 2; without targets the loop runs 5 waves
-        assert graph.shortest_paths(df, [("A", "C")]) == [3], name
-        assert graph.multi_bfs_distances.last_waves == 2, name
-    graph.multi_bfs_distances(_path_edges(spark)["literal"], ["A"])
-    assert graph.multi_bfs_distances.last_waves == 5
+    monkeypatch.setattr(
+        cls, "localCheckpoint", lambda df, *a, **k: checkpoints.append(1) or local_checkpoint(df, *a, **k)
+    )
+    for name, df in frames.items():
+        assert [graph.bfs_query(df, a, b) for a, b in requests] == want, name
+        assert graph.bfs_query(df, "A", "C", max_depth=1) == -1, name
+        # A reaches C on wave 2; without a target the loop runs 5 waves
+        extra = 0 if graph._materialized(df) else 1
+        checkpoints.clear()
+        assert graph.bfs_query(df, "A", "C") == 3, name
+        assert len(checkpoints) == 2 + extra, name
+        checkpoints.clear()
+        graph.multi_bfs_distances(df, ["A"])
+        assert len(checkpoints) == 5 + extra, name
+    assert len(built) == 2
 
 
 def test_bfs_query_on_literal_frame_starts_no_job(spark, monkeypatch):
@@ -191,7 +204,9 @@ def test_bfs_query_on_literal_frame_starts_no_job(spark, monkeypatch):
     sc = spark.sparkContext
     sc.setJobGroup("bfs-query-jobs", "bfs_query job count")
     try:
-        assert [graph.bfs_query(df, "A", "E"), graph.bfs_query(df, "E", "C")] == [5, 3]
+        # "BB" is unknown but sorts between two known ids
+        got = [graph.bfs_query(df, a, b) for a, b in [("A", "E"), ("E", "C"), ("A", "BB")]]
+        assert got == [5, 3, -1]
     finally:
         sc.setJobGroup("", "")
     assert sc.statusTracker().getJobIdsForGroup("bfs-query-jobs") == []
